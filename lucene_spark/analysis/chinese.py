@@ -8,11 +8,13 @@ hidden-Markov word segmentation whose OOV behavior is single-character
 tokens; Utility.java — fullwidth/presentation-form normalization;
 resources stopwords.txt — the default stop set is punctuation).
 
-Shared lattice design with analysis/cjk.py (kuromoji role) and
-analysis/korean.py (nori role): Viterbi over dictionary prefix arcs
-with single-character unknown arcs — exactly the reference's observable
-OOV contract (TestSmartChineseAnalyzer.testOOV: 优素福·拉扎·吉拉尼 →
-one token per character). The public TestSmartChineseAnalyzer golden
+The prefix dictionary, best-path walk and memoized segmenter are the
+lattice core shared with the kuromoji and nori roles
+(:mod:`lucene_spark.analysis._lattice`); this module supplies the
+Chinese policies — dictionary word costs, a flat connection cost and
+single-character unknown arcs, exactly the reference's observable OOV
+contract (TestSmartChineseAnalyzer.testOOV: 优素福·拉扎·吉拉尼 → one
+token per character). The public TestSmartChineseAnalyzer golden
 subset is pinned in tests/test_chinese.py with the reference's offsets
 and position increments.
 
@@ -34,6 +36,7 @@ from __future__ import annotations
 
 from functools import lru_cache
 
+from lucene_spark.analysis._lattice import best_path, prefix_dict, segmenter
 from lucene_spark.analysis.porter import porter_stem
 
 HANZI, LATIN, DIGIT, PUNCT, SPACE, OTHER = range(6)
@@ -47,15 +50,10 @@ _STOP_PUNCT = set(
 )
 
 
-def _fold(ch: str) -> str:
-    """Utility.java fullwidth → halfwidth normalization (offsets are
-    preserved: 1 char → 1 char)."""
-    o = ord(ch)
-    if 0xFF01 <= o <= 0xFF5E:
-        return chr(o - 0xFEE0)
-    if o == 0x3000:
-        return " "
-    return ch
+# Utility.java fullwidth → halfwidth normalization, a str.translate
+# table (offsets are preserved: 1 char → 1 char)
+_FOLD = {o: o - 0xFEE0 for o in range(0xFF01, 0xFF5F)}
+_FOLD[0x3000] = " "
 
 
 def _char_class(ch: str) -> int:
@@ -92,54 +90,32 @@ _UNK_SINGLE = 6000  # OOV hanzi: one arc per character (HHMM contract)
 _CONN = 200
 
 
+def _conn(_prev_tag, _tag) -> int:
+    """The flat connection cost: zh arcs carry no tags."""
+    return _CONN
+
+
 @lru_cache(maxsize=64)
 def _dict_of(user_words: tuple = ()):
     entries = list(_WORD_DICT) + [(w, 1500) for w in user_words]
-    by_first: dict[str, list] = {}
-    for surf, cost in entries:
-        by_first.setdefault(surf[0], []).append((surf, cost))
-    for lst in by_first.values():
-        lst.sort(key=lambda e: (-len(e[0]), e[0]))
-    return by_first
+    return prefix_dict([(surf, None, cost) for surf, cost in entries])
 
 
-def _viterbi_zh(run: str, user_words: tuple) -> list[tuple[str, int, int]]:
-    """Best path over one hanzi run (HHMMSegmenter.process role):
-    dictionary prefix arcs + single-character unknown arcs."""
+def _run_path(run: str, user_words: tuple) -> list[tuple[int, int, tuple]]:
+    """Best path over one hanzi run (HHMMSegmenter.process role, the
+    lattice core under the zh policy): at each position the
+    single-character unknown arc first, then dictionary prefix arcs."""
     by_first = _dict_of(user_words)
-    n = len(run)
-    INF = float("inf")
-    best = [INF] * (n + 1)
-    back: list = [None] * (n + 1)
-    best[0] = 0.0
-    for i in range(n):
-        if best[i] == INF:
-            continue
-        arcs = [(run[i], _UNK_SINGLE)]
-        for surf, cost in by_first.get(run[i], ()):
-            if run.startswith(surf, i):
-                arcs.append((surf, cost))
-        for surf, cost in arcs:
-            j = i + len(surf)
-            total = best[i] + cost + _CONN
-            if total < best[j] or (
-                total == best[j] and back[j] is not None and len(surf) > len(back[j][0])
-            ):
-                best[j] = total
-                back[j] = (surf, i)
-    out = []
-    j = n
-    while j > 0:
-        surf, i = back[j]
-        out.append((surf, i, j))
-        j = i
-    out.reverse()
-    return out
 
+    def arcs(i: int) -> list:
+        ch = run[i]
+        out = [(ch, None, _UNK_SINGLE)]
+        for e in by_first.get(ch, ()):
+            if run.startswith(e[0], i):
+                out.append(e)
+        return out
 
-@lru_cache(maxsize=50_000)
-def _segment_run_zh(run: str, user_words: tuple) -> tuple:
-    return tuple(_viterbi_zh(run, user_words))
+    return best_path(len(run), arcs, _conn)
 
 
 def segment(
@@ -158,7 +134,7 @@ def segment(
       the testChineseStopWordsOff golden).
     Fullwidth forms fold to halfwidth before classification (offsets
     index the original text)."""
-    folded = [_fold(c) for c in text]
+    folded = text.translate(_FOLD)
     n = len(folded)
     out: list[tuple[str, int, int, int]] = []
     pending_inc = 1
@@ -171,10 +147,10 @@ def segment(
         j = i + 1
         while j < n and _char_class(folded[j]) == cls:
             j += 1
-        seg_text = "".join(folded[i:j])
+        seg_text = folded[i:j]
         if cls == HANZI:
-            for surf, s, e in _segment_run_zh(seg_text, user_words):
-                out.append((surf, i + s, i + e, pending_inc))
+            for _c, s, (surf, _tag, _cost) in _run_path(seg_text, user_words):
+                out.append((surf, i + s, i + s + len(surf), pending_inc))
                 pending_inc = 1
         elif cls == LATIN:
             out.append((porter_stem(seg_text.lower()), i, j, pending_inc))
@@ -197,47 +173,14 @@ def segment(
     return out
 
 
-_HANZI_RE_CACHE = None
+def _token_spans(user_words: tuple, token: str) -> list:
+    return [(t[0], t[1], t[2]) for t in segment(token, user_words=user_words)]
 
 
-def has_hanzi(token: str) -> bool:
-    return any(_char_class(c) == HANZI for c in token)
-
-
-@lru_cache(maxsize=64)
 def make_segmenter_zh(user_words: tuple = ()):
-    """token → [parts] for the analyzer's 1:N expander hook (the
-    cjk/korean make_segmenter contract). Every chunk runs the smartcn
-    stream; stopped punctuation drops WITHOUT a gap on this linear
-    path (documented deviation, see module docstring)."""
-    _dict_of(user_words)
-    memo: dict[str, list[str]] = {}
-
-    def seg(token: str) -> list[str]:
-        got = memo.get(token)
-        if got is None:
-            got = memo[token] = [t[0] for t in segment(token, user_words=user_words)]
-            if len(memo) > 100_000:
-                memo.clear()
-        return got
-
-    return seg
-
-
-@lru_cache(maxsize=64)
-def make_segmenter_zh_spans(user_words: tuple = ()):
-    """Offsets variant — token → [(part, rel_start, rel_end)]."""
-    _dict_of(user_words)
-    memo: dict[str, list] = {}
-
-    def seg(token: str) -> list:
-        got = memo.get(token)
-        if got is None:
-            got = memo[token] = [
-                (t[0], t[1], t[2]) for t in segment(token, user_words=user_words)
-            ]
-            if len(memo) > 100_000:
-                memo.clear()
-        return got
-
-    return seg
+    """``token → parts`` (``.spans``: token → [(part, rel_start,
+    rel_end)]) for the analyzer's 1:N expander hook, over the lattice
+    core's memoized segmenter. Every chunk runs the smartcn stream;
+    stopped punctuation drops WITHOUT a gap on this linear path
+    (documented deviation, see module docstring)."""
+    return segmenter(_token_spans, None, user_words)

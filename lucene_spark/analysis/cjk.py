@@ -32,6 +32,13 @@ Deviations from the reference, stated plainly:
   path (the "code" analyzer's documented gap rule) — a standalone 。
   between two runs therefore leaves a gap the reference would not.
 
+The prefix dictionary, best-path walk, memoized segmenter and compound
+stacker are the lattice core shared with the nori and smartcn roles
+(:mod:`lucene_spark.analysis._lattice`); this module supplies the
+Japanese policies — character classes with invoke/group unknown arcs,
+dictionary entries, part-of-speech connection costs and the search-mode
+penalty.
+
 Scale shape: segmentation is a per-token pure function behind the
 analyzer's 1:N expander hook (the "code" analyzer protocol), so it
 rides the same Arrow-batched pandas UDFs as every other chain; an
@@ -43,6 +50,14 @@ from __future__ import annotations
 
 import re
 from functools import lru_cache
+
+from lucene_spark.analysis._lattice import (
+    best_path,
+    longest_compound,
+    prefix_dict,
+    segmenter,
+    stack_stream,
+)
 
 # ---- character classes (dict/CharacterDefinition.java role) -------------
 
@@ -82,7 +97,11 @@ _UNK_POS = {
     PUNCT: "punct",
 }
 
+# the three tables above as one (invoke, group, max_len, base, per, pos)
+_UNK_ARC = {c: _CLASS_DEF[c] + _UNK_COST[c] + (_UNK_POS[c],) for c in _CLASS_DEF}
 
+
+@lru_cache(maxsize=1 << 16)  # the lattice classifies every character of a run
 def char_class(ch: str) -> int:
     o = ord(ch)
     if 0x4E00 <= o <= 0x9FFF or 0x3400 <= o <= 0x4DBF or 0xF900 <= o <= 0xFAFF:
@@ -183,8 +202,6 @@ _SEARCH_MODE_OTHER_LENGTH = 7
 _SEARCH_MODE_KANJI_PENALTY = 3000
 _SEARCH_MODE_OTHER_PENALTY = 1700
 
-_MAX_UNKNOWN = 255
-
 
 @lru_cache(maxsize=64)
 def _prefix_dict(user_words: tuple = (), ext: bool = False):
@@ -205,12 +222,7 @@ def _prefix_dict(user_words: tuple = (), ext: bool = False):
             if k not in seen or cost < seen[k]:
                 seen[k] = cost
         entries = [(surf, pos, cost) for (surf, pos), cost in seen.items()]
-    by_first: dict[str, list] = {}
-    for surf, pos, cost in entries:
-        by_first.setdefault(surf[0], []).append((surf, pos, cost))
-    for lst in by_first.values():
-        lst.sort(key=lambda e: (-len(e[0]), e[0]))
-    return by_first, {e[0] for e in entries}
+    return prefix_dict(entries), {e[0] for e in entries}
 
 
 def _search_penalty(surface: str, mode: str) -> int:
@@ -227,83 +239,46 @@ def _search_penalty(surface: str, mode: str) -> int:
     return 0
 
 
+def _path(run: str, mode: str, user_words: tuple, ext: bool) -> list[tuple[int, int, tuple]]:
+    """Best path over ONE same-script run — the lattice core's
+    :func:`~lucene_spark.analysis._lattice.best_path` under the ja
+    policy: [(cost so far, start, (surface, pos_tag, cost))]. Arc
+    generation follows ViterbiNBest.processUnknownWord (:120-170):
+    dictionary prefix matches at each position first, then unknown
+    arcs when nothing matched or the character class is invoke;
+    grouping classes emit one arc spanning the same-class run (PUNCT
+    is its own class), the others one arc per length; max_len caps
+    both. Every arc carries its search-mode penalty (0 in normal
+    mode)."""
+    by_first, _ = _prefix_dict(user_words, ext)
+    classes = list(map(char_class, run))
+    n = len(run)
+
+    def arcs(i: int) -> list:
+        out = []
+        for surf, pos, cost in by_first.get(run[i], ()):
+            if run.startswith(surf, i):
+                out.append((surf, pos, cost + _search_penalty(surf, mode)))
+        cls = classes[i]
+        invoke, group, max_len, base, per, pos = _UNK_ARC[cls]
+        if not out or invoke:
+            end = i + 1
+            stop = min(n, i + max_len)
+            while end < stop and classes[end] == cls:
+                end += 1
+            for j in (end,) if group else range(i + 1, end + 1):
+                surf = run[i:j]
+                out.append((surf, pos, base + per * (j - i) + _search_penalty(surf, mode)))
+        return out
+
+    return best_path(n, arcs, _conn)
+
+
 def _viterbi(
     run: str, mode: str, user_words: tuple, ext: bool = False
 ) -> list[tuple[str, int, int, str]]:
-    """Best-path lattice walk over ONE same-script run. Returns
-    [(surface, start, end, pos_tag)] covering the run. Arc generation
-    follows ViterbiNBest.processUnknownWord (:120-170): dictionary
-    prefix matches at each position, plus unknown arcs when nothing
-    matched or the character class is invoke; grouping classes emit
-    one arc spanning the same-class/punct-parity prefix run.
-    Deterministic tie-break: (cost, -length, surface)."""
-    by_first, _ = _prefix_dict(user_words, ext)
-    n = len(run)
-    INF = float("inf")
-    # best[i] = (cost, arc) reaching position i; arc = (start, surface, pos)
-    best_cost = [INF] * (n + 1)
-    best_arc: list = [None] * (n + 1)
-    best_cost[0] = 0
-    best_pos = ["BOS"] * (n + 1)
-    for i in range(n):
-        if best_cost[i] == INF:
-            continue
-        arcs: list[tuple[str, str, int]] = []
-        matched = False
-        for surf, pos, cost in by_first.get(run[i], ()):
-            if run.startswith(surf, i):
-                arcs.append((surf, pos, cost + _search_penalty(surf, mode)))
-                matched = True
-        cls = char_class(run[i])
-        invoke, group, max_len = _CLASS_DEF[cls]
-        if not matched or invoke:
-            base, per = _UNK_COST[cls]
-            if group:
-                # span the same-class run (punct parity implicit: PUNCT
-                # is its own class)
-                j = i + 1
-                while j < n and j - i < _MAX_UNKNOWN and char_class(run[j]) == cls:
-                    j += 1
-                surf = run[i:j]
-                arcs.append(
-                    (surf, _UNK_POS[cls], base + per * len(surf) + _search_penalty(surf, mode))
-                )
-            else:
-                for ln in range(1, max_len + 1):
-                    if i + ln > n:
-                        break
-                    if any(char_class(c) != cls for c in run[i : i + ln]):
-                        break
-                    surf = run[i : i + ln]
-                    arcs.append(
-                        (surf, _UNK_POS[cls], base + per * ln + _search_penalty(surf, mode))
-                    )
-        for surf, pos, cost in arcs:
-            j = i + len(surf)
-            total = best_cost[i] + cost + _conn(best_pos[i], pos)
-            cur = best_cost[j]
-            if total < cur or (
-                total == cur
-                and best_arc[j] is not None
-                and (-len(surf), surf) < (-len(best_arc[j][1]), best_arc[j][1])
-            ):
-                best_cost[j] = total
-                best_arc[j] = (i, surf, pos)
-                best_pos[j] = pos
-    # backtrace
-    out = []
-    j = n
-    while j > 0:
-        i, surf, pos = best_arc[j]
-        out.append((surf, i, j, pos))
-        j = i
-    out.reverse()
-    return out
-
-
-@lru_cache(maxsize=50_000)
-def _segment_run(run: str, mode: str, user_words: tuple, ext: bool = False) -> tuple:
-    return tuple(_viterbi(run, mode, user_words, ext))
+    """[(surface, start, end, pos_tag)] covering ``run`` (:func:`_path`)."""
+    return [(a[0], i, i + len(a[0]), a[1]) for _c, i, a in _path(run, mode, user_words, ext)]
 
 
 def segment(
@@ -330,29 +305,22 @@ def segment(
     out: list[tuple[str, int, int, int, int]] = []
     for m in _CJK_RUN_RE.finditer(text):
         run, off = m.group(), m.start()
-        toks = [
-            (surf, off + s, off + e, pos)
-            for surf, s, e, pos in _segment_run(run, mode, user_words, ext)
+        kept = [
+            (surf, off + s, off + e)
+            for surf, s, e, pos in _viterbi(run, mode, user_words, ext)
+            if not (discard_punct and pos == "punct")
         ]
-        kept = [t for t in toks if not (discard_punct and t[3] == "punct")]
-        i = 0
-        while i < len(kept):
-            surf, s, e, _pos = kept[i]
+        toks = [t[0] for t in kept]
+        starts = [t[1] for t in kept]
+        ends = [t[2] for t in kept]
+        for i, (surf, s, e) in enumerate(kept):
             out.append((surf, s, e, 1, 1))
             if compound_synonyms:
                 # longest dictionary compound starting at this token
                 # and covering whole following tokens
-                span_end, count = None, 0
-                acc_end = e
-                for j in range(i + 1, len(kept)):
-                    if kept[j][1] != acc_end:
-                        break  # punctuation gap: not a contiguous span
-                    acc_end = kept[j][2]
-                    if text[s:acc_end] in surfaces:
-                        span_end, count = acc_end, j - i + 1
-                if span_end is not None:
-                    out.append((text[s:span_end], s, span_end, 0, count))
-            i += 1
+                hit = longest_compound(toks, range(len(kept)), starts, ends, i, surfaces)
+                if hit is not None:
+                    out.append((hit[0], s, ends[hit[1]], 0, hit[1] - i + 1))
     return out
 
 
@@ -368,55 +336,21 @@ def is_cjk_run(token: str) -> bool:
     return bool(token) and _CJK_RUN_RE.fullmatch(token) is not None
 
 
-@lru_cache(maxsize=64)
+def _token_spans(user_words: tuple, mode: str, ext: bool, token: str) -> list:
+    return [
+        (a[0], i, i + len(a[0]))
+        for _c, i, a in _path(token, mode, user_words, ext)
+        if a[1] != "punct"
+    ]
+
+
 def make_segmenter(user_words: tuple = (), mode: str = "normal", ext: bool = False):
-    """Resolve the dictionary ONCE and return ``token → parts`` with a
-    persistent per-closure run memo — the analyzer hot path. Keying a
-    global per-run lru_cache on the user_words tuple would re-hash the
-    whole vocabulary per token (tuples do not cache their hash); this
-    factory pays that hash once per tokenize batch and the memo hits
-    on plain string keys."""
-    _prefix_dict(user_words, ext)  # warm the dictionary cache
-    memo: dict[str, list[str]] = {}
-
-    def seg(token: str) -> list[str]:
-        if not is_cjk_run(token):
-            return [token.lower()]
-        got = memo.get(token)
-        if got is None:
-            got = memo[token] = [
-                surf for surf, _s, _e, _pos in _viterbi(token, mode, user_words, ext)
-                if not (_pos == "punct")
-            ]
-            if len(memo) > 100_000:
-                memo.clear()
-        return got
-
-    return seg
-
-
-@lru_cache(maxsize=64)
-def make_segmenter_spans(user_words: tuple = (), mode: str = "normal", ext: bool = False):
-    """Offsets variant of :func:`make_segmenter` — token → [(part,
-    rel_start, rel_end)] with the same closure-resolved dictionary."""
-    _prefix_dict(user_words, ext)
-    memo: dict[str, list] = {}
-
-    def seg(token: str) -> list:
-        if not is_cjk_run(token):
-            return [(token.lower(), 0, len(token))]
-        got = memo.get(token)
-        if got is None:
-            got = memo[token] = [
-                (surf, s, e)
-                for surf, s, e, _pos in _viterbi(token, mode, user_words, ext)
-                if not (_pos == "punct")
-            ]
-            if len(memo) > 100_000:
-                memo.clear()
-        return got
-
-    return seg
+    """``token → parts`` (``.spans``: token → [(part, rel_start,
+    rel_end)]) — the analyzer hot path over the lattice core's shared
+    memoized :func:`~lucene_spark.analysis._lattice.segmenter`. A CJK
+    run segments (punctuation dropped); any other token lowercases
+    through unchanged."""
+    return segmenter(_token_spans, is_cjk_run, user_words, mode, ext)
 
 
 def cjk_parts(token: str, user_words: tuple = (), mode: str = "normal") -> list[str]:
@@ -435,7 +369,7 @@ def cjk_parts_spans(
 ) -> list[tuple[str, int, int]]:
     """Offsets variant of :func:`cjk_parts` — (part, rel_start,
     rel_end) into the raw token (the code_parts_spans protocol)."""
-    return make_segmenter_spans(user_words, mode)(token)
+    return make_segmenter(user_words, mode).spans(token)
 
 
 def compound_surfaces(user_words: tuple = (), ext: bool = False) -> set:
@@ -449,48 +383,13 @@ def compound_stream(toks, poss, user_words: tuple = (), starts=None, ends=None, 
     (the discardCompoundToken=false stream flattened — the same
     index-time approximation as SynonymGraphFilter+FlattenGraphFilter,
     which squashes posLength): the longest dictionary surface covering
-    >=2 consecutive position-contiguous tokens stacks at the FIRST
-    sub-token's position with overlap=True (norm-discounted). Returns
-    (tokens, positions, overlaps[, starts, ends]) — the _stacker_of
-    contract."""
+    >=2 consecutive position- (and, when offsets are known, offset-)
+    contiguous tokens stacks at the FIRST sub-token's position with
+    overlap=True (norm-discounted). Returns (tokens, positions,
+    overlaps[, starts, ends]) — the _stacker_of contract."""
     if surfaces is None:
         _, surfaces = _prefix_dict(user_words)
-    out_t, out_p, out_o = [], [], []
-    out_s: list | None = [] if starts is not None else None
-    out_e: list | None = [] if starts is not None else None
-    n = len(toks)
-    for i in range(n):
-        out_t.append(toks[i])
-        out_p.append(poss[i])
-        out_o.append(False)
-        if out_s is not None:
-            out_s.append(starts[i])
-            out_e.append(ends[i])
-        acc = toks[i]
-        best = None
-        j = i + 1
-        # contiguity needs BOTH adjacent positions and (when offsets
-        # are known) adjacent offsets: discarded punctuation leaves no
-        # position gap, but the reference's single lattice arc spans
-        # raw text — it would never stack a compound across the dropped
-        # character (ソフト・ウェア must NOT yield ソフトウェア), so
-        # mirror segment()'s acc_end check here
-        while (
-            j < n
-            and poss[j] == poss[j - 1] + 1
-            and (starts is None or starts[j] == ends[j - 1])
-        ):
-            acc += toks[j]
-            if acc in surfaces:
-                best = (acc, j)
-            j += 1
-        if best is not None:
-            out_t.append(best[0])
-            out_p.append(poss[i])
-            out_o.append(True)
-            if out_s is not None:
-                out_s.append(starts[i])
-                out_e.append(ends[best[1]])
-    if out_s is not None:
-        return out_t, out_p, out_o, out_s, out_e
-    return out_t, out_p, out_o
+    return stack_stream(
+        toks, poss, starts, ends,
+        lambda i: longest_compound(toks, poss, starts, ends, i, surfaces),
+    )

@@ -10,15 +10,17 @@ user surfaces, optionally with a segmentation, join the lattice;
 DecompoundToken/DictionaryToken — COMPOUND/INFLECT expansion shapes;
 KoreanReadingFormFilter — hanja reading substitution).
 
-Shares the lattice design of :mod:`lucene_spark.analysis.cjk` (the
-kuromoji role) — per-chunk Viterbi over dictionary prefix arcs plus
-character-class unknown arcs — with the Korean-specific machinery on
-top: decompound modes driven by dictionary COMPOUND/INFLECT entries,
-unknown-unigram output, and whitespace handled by chunking (the
-reference walks one lattice with space penalties; splitting at
-whitespace and walking per-chunk lattices yields the same streams for
-every mirrored golden, since no mecab-ko-dic arc crosses whitespace in
-them).
+The prefix dictionary, best-path walk, memoized segmenter and compound
+stacker are the shared lattice core (:mod:`lucene_spark.analysis._lattice`,
+also behind the kuromoji-role :mod:`~lucene_spark.analysis.cjk`); this
+module supplies the Korean policies — character classes, dictionary
+entries, grouped or unigram unknown arcs, tag-pair connection costs —
+and the Korean-specific machinery on top: decompound modes driven by
+dictionary COMPOUND/INFLECT entries, unknown-unigram output, and
+whitespace handled by chunking (the reference walks one lattice with
+space penalties; splitting at whitespace and walking per-chunk lattices
+yields the same streams for every mirrored golden, since no mecab-ko-dic
+arc crosses whitespace in them).
 
 Deviations from the reference, stated plainly:
 
@@ -43,6 +45,14 @@ from __future__ import annotations
 import re
 import unicodedata
 from functools import lru_cache
+
+from lucene_spark.analysis._lattice import (
+    best_path,
+    longest_compound,
+    prefix_dict,
+    segmenter,
+    stack_stream,
+)
 
 MORPHEME, COMPOUND, INFLECT = "morpheme", "compound", "inflect"
 
@@ -186,74 +196,41 @@ def _parse_user(entry: str):
 def _dict_of(user_words: tuple = ()):
     """first-char → [(surface, tag, cost, type, decomp)] longest-first
     (TokenInfoDictionary prefix-lookup role + UserDictionary merge)."""
-    entries = list(_SYSTEM_DICT) + [_parse_user(w) for w in user_words]
-    by_first: dict[str, list] = {}
-    for e in entries:
-        by_first.setdefault(e[0][0], []).append(e)
-    for lst in by_first.values():
-        lst.sort(key=lambda e: (-len(e[0]), e[0]))
-    return by_first
+    return prefix_dict(list(_SYSTEM_DICT) + [_parse_user(w) for w in user_words])
 
 
-def _viterbi_ko(chunk: str, user_words: tuple, unigrams: bool):
-    """Best path over one whitespace-free chunk. Returns
-    [(surface, start, end, tag, type, decomp)]. Unknown arcs: one arc
-    per same-class run (char.def group semantics), or per-character
-    unigrams tagged SY when ``unigrams`` (outputUnknownUnigrams)."""
+def _chunk_path(chunk: str, user_words: tuple, unigrams: bool):
+    """Best path over one whitespace-free chunk (the lattice core under
+    the ko policy): [(cost so far, start, (surface, tag, cost, type, decomp))].
+    Dictionary arcs come first, then one unknown arc: the same-class run
+    (char.def group semantics), or the single character tagged SY when
+    ``unigrams`` (outputUnknownUnigrams; punctuation stays grouped)."""
     by_first = _dict_of(user_words)
+    classes = list(map(char_class, chunk))
     n = len(chunk)
-    INF = float("inf")
-    best_cost = [INF] * (n + 1)
-    best_arc: list = [None] * (n + 1)
-    best_tag = ["BOS"] * (n + 1)
-    best_cost[0] = 0
-    for i in range(n):
-        if best_cost[i] == INF:
-            continue
-        arcs = []  # (surface, tag, type, decomp, cost)
-        for surf, tag, cost, typ, dec in by_first.get(chunk[i], ()):
-            if chunk.startswith(surf, i):
-                arcs.append((surf, tag, typ, dec, cost))
-        cls = char_class(chunk[i])
+
+    def arcs(i: int) -> list:
+        out = []
+        for e in by_first.get(chunk[i], ()):
+            if chunk.startswith(e[0], i):
+                out.append(e)
+        cls = classes[i]
         if unigrams and cls != PUNCT:
-            # outputUnknownUnigrams: unknown coverage is per-character,
-            # tagged SY (the reference's unigram golden: 2018 -> SY x4)
-            arcs.append((chunk[i], "SY", MORPHEME, (), 11000))
+            # the reference's unigram golden: 2018 -> SY x4
+            out.append((chunk[i], "SY", 11000, MORPHEME, ()))
         else:
             tag, base, per = _UNK[cls]
             j = i + 1
-            while j < n and j - i < 255 and char_class(chunk[j]) == cls:
+            while j < n and j - i < 255 and classes[j] == cls:
                 j += 1
             surf = chunk[i:j]
             typ = MORPHEME
             if cls == PUNCT:
                 tag, typ = _punct_tag(surf), "punct"
-            arcs.append((surf, tag, typ, (), base + per * len(surf)))
-        for surf, tag, typ, dec, cost in arcs:
-            j = i + len(surf)
-            total = best_cost[i] + cost + _conn(best_tag[i], tag)
-            cur = best_cost[j]
-            if total < cur or (
-                total == cur
-                and best_arc[j] is not None
-                and (-len(surf), surf) < (-len(best_arc[j][0]), best_arc[j][0])
-            ):
-                best_cost[j] = total
-                best_arc[j] = (surf, i, tag, typ, dec)
-                best_tag[j] = tag
-    out = []
-    j = n
-    while j > 0:
-        surf, i, tag, typ, dec = best_arc[j]
-        out.append((surf, i, j, tag, typ, dec))
-        j = i
-    out.reverse()
-    return out
+            out.append((surf, tag, base + per * len(surf), typ, ()))
+        return out
 
-
-@lru_cache(maxsize=50_000)
-def _segment_chunk(chunk: str, user_words: tuple, unigrams: bool) -> tuple:
-    return tuple(_viterbi_ko(chunk, user_words, unigrams))
+    return best_path(n, arcs, _conn)
 
 
 def segment(
@@ -276,7 +253,8 @@ def segment(
     out: list[tuple] = []
     for m in _CHUNK_RE.finditer(text):
         chunk, off = m.group(), m.start()
-        for surf, s, e, tag, typ, dec in _segment_chunk(chunk, user_words, unigrams):
+        for _c, s, (surf, tag, _cost, typ, dec) in _chunk_path(chunk, user_words, unigrams):
+            e = s + len(surf)
             if typ == "punct":
                 if discard_punct:
                     continue
@@ -366,112 +344,42 @@ def mixed_stream(toks, poss, user_words: tuple = (), starts=None, ends=None, map
     if maps is None:
         maps = mixed_stack_maps(user_words)
     compounds, inflects = maps
-    out_t, out_p, out_o = [], [], []
-    out_s: list | None = [] if starts is not None else None
-    out_e: list | None = [] if starts is not None else None
-    n = len(toks)
-    for i in range(n):
-        out_t.append(toks[i])
-        out_p.append(poss[i])
-        out_o.append(False)
-        if out_s is not None:
-            out_s.append(starts[i])
-            out_e.append(ends[i])
-        # compound: contiguous positions AND (when offsets are known)
-        # contiguous offsets re-join to a dictionary compound surface
-        acc = toks[i]
-        best = None
-        j = i + 1
-        while (
-            j < n
-            and poss[j] == poss[j - 1] + 1
-            and (starts is None or starts[j] == ends[j - 1])
-        ):
-            acc += toks[j]
-            if acc in compounds:
-                best = (acc, j)
-            j += 1
-        if best is not None:
-            out_t.append(best[0])
-            out_p.append(poss[i])
-            out_o.append(True)
-            if out_s is not None:
-                out_s.append(starts[i])
-                out_e.append(ends[best[1]])
-            continue
+
+    def overlay(i: int):
+        hit = longest_compound(toks, poss, starts, ends, i, compounds)
+        if hit is not None or not inflects:
+            return hit
         # inflect: consecutive parts covering ONE identical span (when
         # offsets are tracked); offsets-free streams fall back to
         # position adjacency, the same documented approximation as the
-        # compound branch above
-        if inflects:
-            j = i + 1
-            seq = [toks[i]]
-            while (
-                j < n
-                and poss[j] == poss[j - 1] + 1
-                and (
-                    starts is None
-                    or (starts[j] == starts[i] and ends[j] == ends[i])
-                )
-            ):
-                seq.append(toks[j])
-                surf = inflects.get(tuple(seq))
-                if surf is not None:
-                    out_t.append(surf)
-                    out_p.append(poss[i])
-                    out_o.append(True)
-                    if out_s is not None:
-                        out_s.append(starts[i])
-                        out_e.append(ends[i])
-                    break
-                j += 1
-    if out_s is not None:
-        return out_t, out_p, out_o, out_s, out_e
-    return out_t, out_p, out_o
+        # compound branch
+        j = i + 1
+        seq = [toks[i]]
+        while (
+            j < len(toks)
+            and poss[j] == poss[j - 1] + 1
+            and (starts is None or (starts[j] == starts[i] and ends[j] == ends[i]))
+        ):
+            seq.append(toks[j])
+            surf = inflects.get(tuple(seq))
+            if surf is not None:
+                return surf, i
+            j += 1
+        return None
+
+    return stack_stream(toks, poss, starts, ends, overlay)
 
 
-@lru_cache(maxsize=64)
+def _token_spans(user_words: tuple, decompound: str, token: str) -> list:
+    return [(t[0].lower(), t[1], t[2]) for t in segment(token, decompound, user_words)]
+
+
 def make_segmenter_ko(user_words: tuple = (), decompound: str = "discard"):
-    """token → [parts] for the analyzer's 1:N expander hook (the
-    cjk make_segmenter contract): Korean-bearing tokens run the
-    lattice (punctuation dropped, parts lowercased for non-hangul);
-    all-other tokens lowercase through unchanged."""
-    _dict_of(user_words)
-    memo: dict[str, list[str]] = {}
-
-    def seg(token: str) -> list[str]:
-        if not is_korean(token):
-            return [token.lower()]
-        got = memo.get(token)
-        if got is None:
-            got = memo[token] = [
-                t[0].lower() for t in segment(token, decompound, user_words)
-            ]
-            if len(memo) > 100_000:
-                memo.clear()
-        return got
-
-    return seg
-
-
-@lru_cache(maxsize=64)
-def make_segmenter_ko_spans(user_words: tuple = (), decompound: str = "discard"):
-    """Offsets variant — token → [(part, rel_start, rel_end)]. MIXED
-    would emit overlapping spans; the index chain uses discard/none
-    (overlap stacking is the cjk_search-style stacker's job)."""
-    _dict_of(user_words)
-    memo: dict[str, list] = {}
-
-    def seg(token: str) -> list:
-        if not is_korean(token):
-            return [(token.lower(), 0, len(token))]
-        got = memo.get(token)
-        if got is None:
-            got = memo[token] = [
-                (t[0].lower(), t[1], t[2]) for t in segment(token, decompound, user_words)
-            ]
-            if len(memo) > 100_000:
-                memo.clear()
-        return got
-
-    return seg
+    """``token → parts`` (``.spans``: token → [(part, rel_start,
+    rel_end)]) for the analyzer's 1:N expander hook, over the lattice
+    core's memoized segmenter: Korean-bearing tokens run the lattice
+    (punctuation dropped, parts lowercased for non-hangul); all-other
+    tokens lowercase through unchanged. MIXED would emit overlapping
+    spans; the index chain uses discard/none (overlap stacking is
+    :func:`mixed_stream`'s job)."""
+    return segmenter(_token_spans, is_korean, user_words, decompound)

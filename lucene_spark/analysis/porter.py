@@ -168,9 +168,3 @@ def porter_stem(word: str) -> str:
         w = w[:-1]
 
     return w
-
-
-def stem_tokens(tokens: list[str]) -> list[str]:
-    """PorterStemFilter.incrementToken over a token list (positions /
-    offsets are untouched — stemming is 1:1 per token)."""
-    return [porter_stem(t) for t in tokens]

@@ -195,47 +195,39 @@ def _ko_decompound(stem: str) -> str:
     return "none" if stem.partition(":")[0] == "ko_none" else "discard"
 
 
-def _expander(stem):
-    """token → list-of-parts analyzers (1:N chains: "code" case-part
-    splitting, "cjk[:userdict]" / "cjk_search[:userdict]" Viterbi
+def _expander_spans(stem):
+    """token → [(part, rel_start, rel_end)] analyzers (1:N chains:
+    "code" case-part splitting, "cjk*" / "ko*" / "zh" lattice
     segmentation); None for every 1:1 chain handled by
     :func:`_emitter`."""
     if stem == "code":
-        return code_parts
-    if isinstance(stem, str) and stem.startswith("cjk"):
+        return code_parts_spans
+    if not isinstance(stem, str):
+        return None
+    head = stem.partition(":")[0]
+    if head.startswith("cjk"):
         from lucene_spark.analysis.cjk import make_segmenter
 
-        return make_segmenter(_cjk_user_words(stem), _cjk_mode(stem), _cjk_ext(stem))
-    if isinstance(stem, str) and stem.partition(":")[0] in ("ko", "ko_none", "ko_mixed"):
+        return make_segmenter(_cjk_user_words(stem), _cjk_mode(stem), _cjk_ext(stem)).spans
+    if head in ("ko", "ko_none", "ko_mixed"):
         from lucene_spark.analysis.korean import make_segmenter_ko
 
-        return make_segmenter_ko(_cjk_user_words(stem), _ko_decompound(stem))
-    if isinstance(stem, str) and stem.partition(":")[0] == "zh":
+        return make_segmenter_ko(_cjk_user_words(stem), _ko_decompound(stem)).spans
+    if head == "zh":
         from lucene_spark.analysis.chinese import make_segmenter_zh
 
-        return make_segmenter_zh(_cjk_user_words(stem))
+        return make_segmenter_zh(_cjk_user_words(stem)).spans
     return None
 
 
-def _expander_spans(stem):
-    """Offsets variant of :func:`_expander`: token → [(part,
-    rel_start, rel_end)] — used by the offsets-tracking tokenize
-    path."""
+def _expander(stem):
+    """token → list-of-parts: the parts projection of
+    :func:`_expander_spans` ("code" keeps its offsets-free regex
+    split)."""
     if stem == "code":
-        return code_parts_spans
-    if isinstance(stem, str) and stem.startswith("cjk"):
-        from lucene_spark.analysis.cjk import make_segmenter_spans
-
-        return make_segmenter_spans(_cjk_user_words(stem), _cjk_mode(stem), _cjk_ext(stem))
-    if isinstance(stem, str) and stem.partition(":")[0] in ("ko", "ko_none", "ko_mixed"):
-        from lucene_spark.analysis.korean import make_segmenter_ko_spans
-
-        return make_segmenter_ko_spans(_cjk_user_words(stem), _ko_decompound(stem))
-    if isinstance(stem, str) and stem.partition(":")[0] == "zh":
-        from lucene_spark.analysis.chinese import make_segmenter_zh_spans
-
-        return make_segmenter_zh_spans(_cjk_user_words(stem))
-    return None
+        return code_parts
+    spans = _expander_spans(stem)
+    return None if spans is None else spans.parts
 
 
 # WhitespaceTokenizer (lucene/analysis/common .../core/

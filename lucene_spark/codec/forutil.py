@@ -92,20 +92,6 @@ def _pack_bits(vals: np.ndarray, width: int) -> bytes:
     return np.packbits(bits[:, 64 - width :].reshape(-1)).tobytes()
 
 
-def _unpack_bits(buf: bytes, n: int, width: int) -> np.ndarray:
-    if width == 0:
-        return np.zeros(n, dtype=np.uint64)
-    bits = np.unpackbits(np.frombuffer(buf, dtype=np.uint8), count=n * width).reshape(n, width)
-    out = np.zeros((n, 64), dtype=np.uint8)
-    out[:, 64 - width :] = bits
-    return np.packbits(out, axis=1).view(">u8").ravel().astype(np.uint64)
-
-
-def _width(vals: np.ndarray) -> int:
-    m = int(vals.max()) if len(vals) else 0
-    return int(m).bit_length()
-
-
 def _bit_lengths(m: np.ndarray) -> np.ndarray:
     """Vectorized ``int.bit_length`` over a uint64 array (exact — no
     float log2 edge cases)."""

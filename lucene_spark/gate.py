@@ -365,46 +365,87 @@ def icu_gate_index(spark: SparkSession, sf_dir: str) -> tuple[SearchIndex, Searc
     return _CACHE[key]
 
 
-def _cjk_words(text: str) -> list:
-    """One doc's engine token stream under the katakana translation +
-    marker — shared by the corpus transform, the vocabulary
-    derivation, and the build-time bijection check."""
+_CJK_TR = str.maketrans(
+    # a-z → katakana; 0-9 → fullwidth digits (still one CJK run);
+    # '_' / "'" (ExtendNumLet / joiner chars the engine keeps inside
+    # tokens) → kanji so such tokens stay single runs too. The 間
+    # marker is outside this alphabet, keeping the word code
+    # prefix-free; the build-time bijection check fails loudly on any
+    # future token shape this table does not cover.
+    "abcdefghijklmnopqrstuvwxyz0123456789_'",
+    "アイウエオカキクケコサシスセソタチツテトナニヌネノハ０１２３４５６７８９下之",
+)
+
+_KO_TR = str.maketrans(
+    # a-z + 0-9 + _' → distinct hangul syllables; the 힣 marker is
+    # outside this alphabet, keeping the word code prefix-free (the
+    # _CJK_TR pattern). Digits must map to HANGUL (not stay digits) or
+    # the lattice would cut SN arcs mid-word and break the bijection.
+    "abcdefghijklmnopqrstuvwxyz0123456789_'",
+    "가나다라마바사아자차카타파하거너더러머버서어저처커터퍼허고노도로모보소오조초",
+)
+
+_ZH_TR = str.maketrans(
+    # a-z + 0-9 + _' → distinct hanzi DISJOINT from every fixture
+    # word's characters (no system arc can cross a word code); the 齉
+    # marker keeps the code prefix-free (the _CJK_TR/_KO_TR pattern)
+    "abcdefghijklmnopqrstuvwxyz0123456789_'",
+    "山水火木金土石田口目耳手足车马鱼鸟花草竹米贝言虫雨云风空海门户瓦甘玉白皮豆走",
+)
+
+# analyzer → (word-code translation, prefix-free marker, script name)
+_SEGMENTED = {
+    "cjk": (_CJK_TR, "間", "katakana"),
+    "ko": (_KO_TR, "힣", "hangul"),
+    "zh": (_ZH_TR, "齉", "hanzi"),
+}
+
+
+def _seg_term(lang: str, word: str) -> str:
+    tr, marker, _script = _SEGMENTED[lang]
+    return word.translate(tr) + marker
+
+
+def _seg_words(lang: str, text: str) -> list[str]:
+    """One doc's engine token stream as ``lang`` word codes — shared by
+    the corpus transform, the vocabulary derivation, and the
+    build-time bijection check."""
     from lucene_spark.analysis import tokenize
 
-    return [w.translate(_CJK_TR) + "間" for w in tokenize(text or "")]
+    return [_seg_term(lang, w) for w in tokenize(text or "")]
 
 
-def cjk_gate_index(spark: SparkSession, sf_dir: str) -> tuple[SearchIndex, Searcher]:
-    """kuromoji-role "cjk" analyzer gate — bijection construction:
-    every standard token of the corpus translates a→ア … z→ハ with a
-    trailing 間 marker, and the translated words concatenate into
-    ≤250-char unspaced runs. The marker makes the word code
-    prefix-free (間 is outside the katakana alphabet), so the Viterbi
-    lattice (user dictionary = the translated vocabulary,
-    UserDictionary role) recovers EXACTLY the original token
-    boundaries → the token stream bijects to the standard stream and
-    the tscore/post oracles apply verbatim (the code/ascii gate
-    pattern). Reference: JapaneseTokenizer.java:60-120,
-    dict/UserDictionary.java."""
-    key = ("cjk", os.path.abspath(sf_dir))
+def _segmented_gate_index(
+    spark: SparkSession, sf_dir: str, lang: str
+) -> tuple[SearchIndex, Searcher]:
+    """The bijection construction shared by the ja / ko / zh segmenter
+    gates: every standard token of the corpus translates to a
+    prefix-free word code in ``lang``'s script, and the codes
+    concatenate into ≤250-char unspaced runs. With the translated
+    vocabulary as the user dictionary (UserDictionary role) the lattice
+    recovers EXACTLY the original token boundaries, so the token stream
+    bijects to the standard stream and the tscore/post oracles apply
+    verbatim (the code/ascii gate pattern)."""
+    key = (lang, os.path.abspath(sf_dir))
     if key in _CACHE:
         return _CACHE[key]
     from pyspark.sql.functions import pandas_udf
 
+    from lucene_spark.analysis.tokenizer import _expander
+
     name = os.path.basename(os.path.normpath(sf_dir))
-    idx_dir = f"/tmp/lucene_spark_gatecjk_{ENGINE_VERSION}/{name}"
+    idx_dir = f"/tmp/lucene_spark_gate{lang}_{ENGINE_VERSION}/{name}"
 
     @pandas_udf("string")
-    def _cjkify(texts):
+    def _segify(texts):
         import pandas as pd
 
         out = []
         for t in texts:
-            words = _cjk_words(t)
             lines: list[str] = []
             cur: list[str] = []
             ln = 0
-            for w in words:
+            for w in _seg_words(lang, t):
                 if ln + len(w) > 250 and cur:
                     lines.append("".join(cur))
                     cur, ln = [], 0
@@ -419,13 +460,13 @@ def cjk_gate_index(spark: SparkSession, sf_dir: str) -> tuple[SearchIndex, Searc
         base = corpus_df(spark, sf_dir).drop("title")
 
         # vocabulary through the ENGINE tokenizer (the same stream
-        # _cjkify translates — an SQL-regexp vocab could disagree on
+        # _segify translates — an SQL-regexp vocab could disagree on
         # joiner/ExtendNumLet tokens and leave dictionary holes)
         @pandas_udf("array<string>")
         def _tok(texts):
             import pandas as pd
 
-            return pd.Series([_cjk_words(t) for t in texts])
+            return pd.Series([_seg_words(lang, t) for t in texts])
 
         vocab = sorted(
             {
@@ -435,29 +476,26 @@ def cjk_gate_index(spark: SparkSession, sf_dir: str) -> tuple[SearchIndex, Searc
                 ).distinct().collect()
             }
         )
-        analyzer = "cjk:" + ",".join(vocab)
+        analyzer = f"{lang}:" + ",".join(vocab)
         cfg = IndexConfig(
             docs_per_chunk=128, term_buckets=4, positions=True, analyzer=analyzer
         )
-        corpus = base.withColumn("content", _cjkify(F.col("content")))
+        corpus = base.withColumn("content", _segify(F.col("content")))
         # bijection guard: the segmented stream must recover EXACTLY
         # the standard token counts per doc (the prefix-free marker
         # makes this hold by construction; fail LOUDLY if the corpus
         # ever grows token shapes that break the translation instead
         # of letting scores drift from the oracle)
-        from lucene_spark.analysis.cjk import make_segmenter
-
-        seg = make_segmenter(tuple(vocab))
+        seg = _expander(analyzer)
 
         @pandas_udf("boolean")
-        def _bijects(orig, cjk):
+        def _bijects(orig, segmented):
             import pandas as pd
 
             out = []
-            for o, c in zip(orig, cjk):
-                want = _cjk_words(o)
+            for o, c in zip(orig, segmented):
                 got = [p for tok in (c or "").split(" ") for p in seg(tok)]
-                out.append(got == want)
+                out.append(got == _seg_words(lang, o))
             return pd.Series(out)
 
         chk = (
@@ -468,8 +506,8 @@ def cjk_gate_index(spark: SparkSession, sf_dir: str) -> tuple[SearchIndex, Searc
         )
         if chk:
             raise AssertionError(
-                f"cjk gate bijection broken for {chk} docs — the corpus grew "
-                "token shapes the katakana translation does not cover"
+                f"{lang} gate bijection broken for {chk} docs — the corpus grew "
+                f"token shapes the {_SEGMENTED[lang][2]} translation does not cover"
             )
         IndexBuilder(spark, cfg).build(corpus, idx_dir, assign_ids=False)
     index = SearchIndex(spark, idx_dir)
@@ -477,246 +515,31 @@ def cjk_gate_index(spark: SparkSession, sf_dir: str) -> tuple[SearchIndex, Searc
     return _CACHE[key]
 
 
-_CJK_TR = str.maketrans(
-    # a-z → katakana; 0-9 → fullwidth digits (still one CJK run);
-    # '_' / "'" (ExtendNumLet / joiner chars the engine keeps inside
-    # tokens) → kanji so such tokens stay single runs too. The 間
-    # marker is outside this alphabet, keeping the word code
-    # prefix-free; the build-time bijection check fails loudly on any
-    # future token shape this table does not cover.
-    "abcdefghijklmnopqrstuvwxyz0123456789_'",
-    "アイウエオカキクケコサシスセソタチツテトナニヌネノハ０１２３４５６７８９下之",
-)
-
-
-def _cjk_term(word: str) -> str:
-    return word.translate(_CJK_TR) + "間"
-
-
-_KO_TR = str.maketrans(
-    # a-z + 0-9 + _' → distinct hangul syllables; the 힣 marker is
-    # outside this alphabet, keeping the word code prefix-free (the
-    # _CJK_TR pattern). Digits must map to HANGUL (not stay digits) or
-    # the lattice would cut SN arcs mid-word and break the bijection.
-    "abcdefghijklmnopqrstuvwxyz0123456789_'",
-    "가나다라마바사아자차카타파하거너더러머버서어저처커터퍼허고노도로모보소오조초",
-)
-
-
-def _ko_term(word: str) -> str:
-    return word.translate(_KO_TR) + "힣"
-
-
-def _ko_words(text: str) -> list[str]:
-    from lucene_spark.analysis import tokenize
-
-    return [w.translate(_KO_TR) + "힣" for w in tokenize(text or "")]
-
-
-_ZH_TR = str.maketrans(
-    # a-z + 0-9 + _' → distinct hanzi DISJOINT from every fixture
-    # word's characters (no system arc can cross a word code); the 齉
-    # marker keeps the code prefix-free (the _CJK_TR/_KO_TR pattern)
-    "abcdefghijklmnopqrstuvwxyz0123456789_'",
-    "山水火木金土石田口目耳手足车马鱼鸟花草竹米贝言虫雨云风空海门户瓦甘玉白皮豆走",
-)
-
-
-def _zh_term(word: str) -> str:
-    return word.translate(_ZH_TR) + "齉"
-
-
-def _zh_words(text: str) -> list[str]:
-    from lucene_spark.analysis import tokenize
-
-    return [w.translate(_ZH_TR) + "齉" for w in tokenize(text or "")]
+def cjk_gate_index(spark: SparkSession, sf_dir: str) -> tuple[SearchIndex, Searcher]:
+    """kuromoji-role "cjk" analyzer gate: a→ア … z→ハ word codes with a
+    trailing 間 marker (間 is outside the katakana alphabet), through
+    :func:`_segmented_gate_index`. Reference:
+    JapaneseTokenizer.java:60-120, dict/UserDictionary.java."""
+    return _segmented_gate_index(spark, sf_dir, "cjk")
 
 
 def zh_gate_index(spark: SparkSession, sf_dir: str) -> tuple[SearchIndex, Searcher]:
-    """smartcn-role "zh" analyzer gate — the ko/cjk bijection on the
-    HHMM-role lattice: prefix-free hanzi word codes, user dictionary =
-    the translated vocabulary, unspaced ≤250-char runs; the lattice
-    recovers exactly the original token boundaries, so the standard
-    term/phrase oracles apply verbatim. Segmentation-semantics parity
-    is pinned separately in tests/test_chinese.py; this gate proves
-    the ANALYZER INTEGRATION (tokenizer stage, expander, positions)."""
-    key = ("zh", os.path.abspath(sf_dir))
-    if key in _CACHE:
-        return _CACHE[key]
-    from pyspark.sql.functions import pandas_udf
-
-    name = os.path.basename(os.path.normpath(sf_dir))
-    idx_dir = f"/tmp/lucene_spark_gatezh_{ENGINE_VERSION}/{name}"
-
-    @pandas_udf("string")
-    def _zhify(texts):
-        import pandas as pd
-
-        out = []
-        for t in texts:
-            words = _zh_words(t)
-            lines: list[str] = []
-            cur: list[str] = []
-            ln = 0
-            for w in words:
-                if ln + len(w) > 250 and cur:
-                    lines.append("".join(cur))
-                    cur, ln = [], 0
-                cur.append(w)
-                ln += len(w)
-            if cur:
-                lines.append("".join(cur))
-            out.append(" ".join(lines))
-        return pd.Series(out)
-
-    if not os.path.exists(f"{idx_dir}/manifest.json"):
-        base = corpus_df(spark, sf_dir).drop("title")
-
-        @pandas_udf("array<string>")
-        def _tok(texts):
-            import pandas as pd
-
-            return pd.Series([_zh_words(t) for t in texts])
-
-        vocab = sorted(
-            {
-                r["w"]
-                for r in base.select(
-                    F.explode(_tok(F.col("content"))).alias("w")
-                ).distinct().collect()
-            }
-        )
-        analyzer = "zh:" + ",".join(vocab)
-        cfg = IndexConfig(
-            docs_per_chunk=128, term_buckets=4, positions=True, analyzer=analyzer
-        )
-        corpus = base.withColumn("content", _zhify(F.col("content")))
-        from lucene_spark.analysis.chinese import make_segmenter_zh
-
-        seg = make_segmenter_zh(tuple(vocab))
-
-        @pandas_udf("boolean")
-        def _bijects(orig, zh):
-            import pandas as pd
-
-            out = []
-            for o, c in zip(orig, zh):
-                want = _zh_words(o)
-                got = [p for tok in (c or "").split(" ") for p in seg(tok)]
-                out.append(got == want)
-            return pd.Series(out)
-
-        chk = (
-            base.select("doc_id", F.col("content").alias("_orig"))
-            .join(corpus.select("doc_id", "content"), "doc_id")
-            .filter(~_bijects(F.col("_orig"), F.col("content")))
-            .count()
-        )
-        if chk:
-            raise AssertionError(
-                f"zh gate bijection broken for {chk} docs — the corpus grew "
-                "token shapes the hanzi translation does not cover"
-            )
-        IndexBuilder(spark, cfg).build(corpus, idx_dir, assign_ids=False)
-    index = SearchIndex(spark, idx_dir)
-    _CACHE[key] = (index, Searcher(index))
-    return _CACHE[key]
+    """smartcn-role "zh" analyzer gate: prefix-free hanzi word codes on
+    the HHMM-role lattice, through :func:`_segmented_gate_index`.
+    Segmentation-semantics parity is pinned separately in
+    tests/test_chinese.py; this gate proves the ANALYZER INTEGRATION
+    (tokenizer stage, expander, positions)."""
+    return _segmented_gate_index(spark, sf_dir, "zh")
 
 
 def ko_gate_index(spark: SparkSession, sf_dir: str) -> tuple[SearchIndex, Searcher]:
-    """nori-role "ko" analyzer gate — the cjk_gate_index bijection
-    construction on the Korean lattice: every standard token
-    translates to a prefix-free hangul word (marker 힣), words
-    concatenate into ≤250-char unspaced runs, and the Viterbi lattice
-    with the translated vocabulary as the user dictionary
-    (dict/UserDictionary.java role) recovers EXACTLY the original
-    token boundaries — so BM25/phrase over the segmented index equals
-    the standard-analyzer oracles verbatim. Reference:
+    """nori-role "ko" analyzer gate: prefix-free hangul word codes
+    (marker 힣), through :func:`_segmented_gate_index`. Reference:
     KoreanTokenizer.java:61-70, TestKoreanTokenizer.java goldens
     (segmentation parity is pinned separately in tests/test_korean.py;
     this gate proves the ANALYZER INTEGRATION — tokenizer stage,
     expander hook, positions — against the DuckDB oracle)."""
-    key = ("ko", os.path.abspath(sf_dir))
-    if key in _CACHE:
-        return _CACHE[key]
-    from pyspark.sql.functions import pandas_udf
-
-    name = os.path.basename(os.path.normpath(sf_dir))
-    idx_dir = f"/tmp/lucene_spark_gateko_{ENGINE_VERSION}/{name}"
-
-    @pandas_udf("string")
-    def _koify(texts):
-        import pandas as pd
-
-        out = []
-        for t in texts:
-            words = _ko_words(t)
-            lines: list[str] = []
-            cur: list[str] = []
-            ln = 0
-            for w in words:
-                if ln + len(w) > 250 and cur:
-                    lines.append("".join(cur))
-                    cur, ln = [], 0
-                cur.append(w)
-                ln += len(w)
-            if cur:
-                lines.append("".join(cur))
-            out.append(" ".join(lines))
-        return pd.Series(out)
-
-    if not os.path.exists(f"{idx_dir}/manifest.json"):
-        base = corpus_df(spark, sf_dir).drop("title")
-
-        @pandas_udf("array<string>")
-        def _tok(texts):
-            import pandas as pd
-
-            return pd.Series([_ko_words(t) for t in texts])
-
-        vocab = sorted(
-            {
-                r["w"]
-                for r in base.select(
-                    F.explode(_tok(F.col("content"))).alias("w")
-                ).distinct().collect()
-            }
-        )
-        analyzer = "ko:" + ",".join(vocab)
-        cfg = IndexConfig(
-            docs_per_chunk=128, term_buckets=4, positions=True, analyzer=analyzer
-        )
-        corpus = base.withColumn("content", _koify(F.col("content")))
-        from lucene_spark.analysis.korean import make_segmenter_ko
-
-        seg = make_segmenter_ko(tuple(vocab))
-
-        @pandas_udf("boolean")
-        def _bijects(orig, ko):
-            import pandas as pd
-
-            out = []
-            for o, c in zip(orig, ko):
-                want = _ko_words(o)
-                got = [p for tok in (c or "").split(" ") for p in seg(tok)]
-                out.append(got == want)
-            return pd.Series(out)
-
-        chk = (
-            base.select("doc_id", F.col("content").alias("_orig"))
-            .join(corpus.select("doc_id", "content"), "doc_id")
-            .filter(~_bijects(F.col("_orig"), F.col("content")))
-            .count()
-        )
-        if chk:
-            raise AssertionError(
-                f"ko gate bijection broken for {chk} docs — the corpus grew "
-                "token shapes the hangul translation does not cover"
-            )
-        IndexBuilder(spark, cfg).build(corpus, idx_dir, assign_ids=False)
-    index = SearchIndex(spark, idx_dir)
-    _CACHE[key] = (index, Searcher(index))
-    return _CACHE[key]
+    return _segmented_gate_index(spark, sf_dir, "ko")
 
 
 def html_gate_index(spark: SparkSession, sf_dir: str) -> tuple[SearchIndex, Searcher]:
@@ -1222,34 +1045,34 @@ def queries() -> dict:
     # additionally proves segmented POSITIONS (adjacency survives the
     # lattice cuts)
     Q["ft_cjk_top10"] = lambda spark, sf: _hits_df(
-        spark, cjk_gate_index(spark, sf)[1].search(A.TermQuery(_cjk_term("table")), k=10)
+        spark, cjk_gate_index(spark, sf)[1].search(A.TermQuery(_seg_term("cjk", "table")), k=10)
     )
     Q["ft_cjk_phrase_top10"] = lambda spark, sf: _hits_df(
         spark,
         cjk_gate_index(spark, sf)[1].search(
-            A.PhraseQuery((_cjk_term("table"), _cjk_term("hash"))), k=10
+            A.PhraseQuery((_seg_term("cjk", "table"), _seg_term("cjk", "hash"))), k=10
         ),
     )
     # nori-role segmentation: hangul-translated corpus bijects to the
     # standard stream (see ko_gate_index); the phrase gate proves
     # segmented POSITIONS through the Korean lattice
     Q["ft_ko_top10"] = lambda spark, sf: _hits_df(
-        spark, ko_gate_index(spark, sf)[1].search(A.TermQuery(_ko_term("table")), k=10)
+        spark, ko_gate_index(spark, sf)[1].search(A.TermQuery(_seg_term("ko", "table")), k=10)
     )
     Q["ft_ko_phrase_top10"] = lambda spark, sf: _hits_df(
         spark,
         ko_gate_index(spark, sf)[1].search(
-            A.PhraseQuery((_ko_term("table"), _ko_term("hash"))), k=10
+            A.PhraseQuery((_seg_term("ko", "table"), _seg_term("ko", "hash"))), k=10
         ),
     )
     # smartcn-role segmentation, same bijection proof
     Q["ft_zh_top10"] = lambda spark, sf: _hits_df(
-        spark, zh_gate_index(spark, sf)[1].search(A.TermQuery(_zh_term("table")), k=10)
+        spark, zh_gate_index(spark, sf)[1].search(A.TermQuery(_seg_term("zh", "table")), k=10)
     )
     Q["ft_zh_phrase_top10"] = lambda spark, sf: _hits_df(
         spark,
         zh_gate_index(spark, sf)[1].search(
-            A.PhraseQuery((_zh_term("table"), _zh_term("hash"))), k=10
+            A.PhraseQuery((_seg_term("zh", "table"), _seg_term("zh", "hash"))), k=10
         ),
     )
     # html_strip char filter: tag-wrapped corpus tokenizes identically

@@ -47,14 +47,6 @@ from lucene_spark.search.parser import parse_query
 from lucene_spark.search.wand import PostingSource, conjunction_top_k, wand_top_k
 
 
-# distributed search: hot-term chunk rows at or below this count are
-# served from the per-reader row cache (driver-bounded: rows are
-# <= ~100 KB each); above it, the pushed-down parquet scan is the
-# scale path (a corpus-hot term at 10^12 docs has ~10^7 chunk rows —
-# those must never transit the driver)
-DRIVER_HOT_ROWS_MAX = 1024
-
-
 @dataclass
 class TopDocs:
     hits: list[tuple[int, float]]  # (doc_id, score), rank order
@@ -630,11 +622,9 @@ class Searcher:
             )
         return q
 
-    def prepare(self, query: str | A.Query, collect_rows: bool = False, lazy_docsets: bool = False):
-        """Parse → rewrite → Weight creation. With ``collect_rows``
-        (driver mode) the query's posting rows are point-read in ONE
-        Spark job and df/ttf derive from their columns — no separate
-        term_stats lookup; the whole driver query path is one job."""
+    def _analyze(self, query: str | A.Query) -> A.Query:
+        """Parse flags, stem / stem_repeat rewrites and fieldize — the
+        analysis shared by :meth:`prepare` and :meth:`count`."""
         from lucene_spark.analysis.tokenizer import _expander
 
         analyzer = self.index.analyzer
@@ -653,13 +643,20 @@ class Searcher:
             )
         else:
             q = query if one_to_n else A.rewrite(query)
-        if self.index.analyzer not in ("standard", None):
+        if analyzer not in ("standard", None):
             q = self._stem_query(q)
         if self.index.stem_repeat:
             q = self._stem_repeat_query(q)
         if len(self.index.text_fields) > 1:
-            q = self._fieldize(q)
-        q = A.rewrite(self._expand_multiterm(q, lazy_docsets))
+            q = self._fieldize(q)  # composite-key the df point-read too
+        return q
+
+    def prepare(self, query: str | A.Query, collect_rows: bool = False, lazy_docsets: bool = False):
+        """Parse → rewrite → Weight creation. With ``collect_rows``
+        (driver mode) the query's posting rows are point-read in ONE
+        Spark job and df/ttf derive from their columns — no separate
+        term_stats lookup; the whole driver query path is one job."""
+        q = A.rewrite(self._expand_multiterm(self._analyze(query), lazy_docsets))
         terms = sorted(A.extract_terms(q))
         stats = self.index.stats
         rows_by_term = None
@@ -1193,32 +1190,12 @@ class Searcher:
         instead of decoding any postings. mode="distributed" counts
         over the chunked match relation (one long per chunk reaches the
         driver — the cluster shape for non-selective queries)."""
-        # analyze EXACTLY like prepare() (same parser flags, stem /
-        # stem_repeat / code-chain / fieldize rewrites) and take the
-        # shortcut only if the ANALYZED query is still a plain term —
-        # a count() that analyzes differently from search() would
-        # disagree with it (e.g. stem_repeat rewrites a term to a
-        # SynonymQuery; the cased "code" chain must not pre-lowercase)
-        from lucene_spark.analysis.tokenizer import _expander
-
-        an = self.index.analyzer
-        one_to_n = _expander(an) is not None
-        q0 = (
-            parse_query(
-                query,
-                preserve_case=one_to_n,
-                rewrite_tree=not one_to_n,
-                analyzer=an if an in ("whitespace", "keyword") else None,
-            )
-            if isinstance(query, str)
-            else (query if one_to_n else A.rewrite(query))
-        )
-        if an not in ("standard", None):
-            q0 = self._stem_query(q0)
-        if self.index.stem_repeat:
-            q0 = self._stem_repeat_query(q0)
-        if len(self.index.text_fields) > 1:
-            q0 = self._fieldize(q0)  # composite-key the df point-read too
+        # analyze EXACTLY like prepare() and take the shortcut only if
+        # the ANALYZED query is still a plain term — a count() that
+        # analyzes differently from search() would disagree with it
+        # (e.g. stem_repeat rewrites a term to a SynonymQuery; the cased
+        # "code" chain must not pre-lowercase)
+        q0 = self._analyze(query)
         if not len(self.index.deleted_ids):
             if isinstance(q0, A.TermQuery):
                 return self.index.term_stats([q0.term]).get(q0.term, (0, 0))[0]

@@ -67,16 +67,6 @@ def haversine_np(lat_arr, lon_arr, lat: float, lon: float):
     return 2.0 * EARTH_MEAN_RADIUS_M * np.arcsin(np.sqrt(h))
 
 
-def haversine_meters_sql(lat_col: str, lon_col: str, lat: float, lon: float) -> str:
-    """The same formula as ANSI SQL text (for DuckDB oracles)."""
-    return (
-        f"2.0 * {EARTH_MEAN_RADIUS_M!r} * asin(sqrt("
-        f"pow(sin((radians({lat_col}) - radians({lat!r})) / 2.0), 2.0) + "
-        f"cos(radians({lat!r})) * cos(radians({lat_col})) * "
-        f"pow(sin((radians({lon_col}) - radians({lon!r})) / 2.0), 2.0)))"
-    )
-
-
 def box_condition(q) -> Column:
     """GeoBoxQuery → Catalyst predicate. min_lon > max_lon crosses the
     dateline: the box is the UNION of [min_lon, 180] and [-180, max_lon]

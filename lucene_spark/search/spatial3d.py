@@ -184,6 +184,8 @@ def circle_condition(q) -> Column:
     the hot expression."""
     model = MODELS[q.model]
     cutoff = float(q.radius_m) / model.mean_radius
+    if cutoff >= math.pi:
+        return F.lit(True)
     lat0, lon0 = math.radians(q.lat), math.radians(q.lon)
     # coarse phase: |lat - lat0| <= cutoff (always true band bound)
     band_lo = math.degrees(lat0 - cutoff)
@@ -192,60 +194,94 @@ def circle_condition(q) -> Column:
     px, py, pz = direction(lat0, lon0)
     x, y, z = _dir_cols(q.lat_field, q.lon_field)
     dot = x * F.lit(px) + y * F.lit(py) + z * F.lit(pz)
-    if cutoff >= math.pi:
-        return F.lit(True)
     return coarse & (dot >= F.lit(math.cos(cutoff)))
 
 
-def _edge_normals(points) -> list[tuple[float, float, float]]:
-    """Great-circle plane normals of a CLOSED convex ring's edges
-    (GeoConvexPolygon role). Validates convexity + consistent winding:
-    every vertex must sit on the non-negative side of every non-
-    adjacent edge plane; the ring is flipped if clockwise."""
+def _cross(p, q) -> tuple[float, float, float]:
+    return (p[1] * q[2] - p[2] * q[1], p[2] * q[0] - p[0] * q[2], p[0] * q[1] - p[1] * q[0])
+
+
+def _dot(p, q) -> float:
+    return p[0] * q[0] + p[1] * q[1] + p[2] * q[2]
+
+
+def _ring(points) -> list[tuple[float, float]]:
+    """(lat, lon) vertices in degrees, without a repeated closing vertex."""
     pts = [tuple(p) for p in points]
     if pts[0] == pts[-1]:
         pts = pts[:-1]
+    return pts
+
+
+def _ring_dirs(pts) -> list[tuple[float, float, float]]:
+    return [direction(math.radians(la), math.radians(lo)) for la, lo in pts]
+
+
+def _convex_ring(points):
+    """A CLOSED convex ring (GeoConvexPolygon role) as (vertices in
+    degrees, vertex unit vectors, edge great-circle plane normals).
+    Validates convexity + consistent winding: every vertex must sit on
+    the non-negative side of every non-adjacent edge plane; the ring is
+    flipped if clockwise."""
+    pts = _ring(points)
     if len(pts) < 3:
         raise ValueError("polygon needs >= 3 distinct vertices")
-    dirs = [direction(math.radians(la), math.radians(lo)) for la, lo in pts]
-
-    def normals(ds):
-        out = []
-        for i in range(len(ds)):
-            p, qq = ds[i], ds[(i + 1) % len(ds)]
-            out.append(
-                (
-                    p[1] * qq[2] - p[2] * qq[1],
-                    p[2] * qq[0] - p[0] * qq[2],
-                    p[0] * qq[1] - p[1] * qq[0],
-                )
-            )
-        return out
-
+    dirs = _ring_dirs(pts)
     for ds in (dirs, list(reversed(dirs))):
-        ns = normals(ds)
-        ok = all(
-            ns[i][0] * d[0] + ns[i][1] * d[1] + ns[i][2] * d[2] >= -1e-12
-            for i in range(len(ds))
-            for d in ds
-        )
+        ns = [_cross(ds[i], ds[(i + 1) % len(ds)]) for i in range(len(ds))]
+        ok = all(_dot(n, d) >= -1e-12 for n in ns for d in ds)
         if ok:
-            return ns
+            return pts, ds, ns
     raise ValueError("polygon is not convex (GeoConvexPolygon subset)")
+
+
+def _arc_extreme_lats(p, q) -> list[float]:
+    """Latitudes (degrees) of the great circle's northernmost and
+    southernmost points that lie on the minor arc p→q (unit vectors).
+    With m = p × q, the circle's apex direction is (-mz·mx, -mz·my,
+    mx² + my²) at z = ±sqrt((mx² + my²) / |m|²); a point c is on the
+    arc when both (p × c)·m and (c × q)·m are non-negative."""
+    m = _cross(p, q)
+    h2 = m[0] * m[0] + m[1] * m[1]
+    if h2 == 0.0:  # the equator: z is 0 along the whole arc
+        return []
+    out = []
+    for sign in (1.0, -1.0):
+        c = (-sign * m[2] * m[0], -sign * m[2] * m[1], sign * h2)
+        if _dot(_cross(p, c), m) >= 0.0 and _dot(_cross(c, q), m) >= 0.0:
+            out.append(sign * math.degrees(math.asin(math.sqrt(h2 / (h2 + m[2] * m[2])))))
+    return out
+
+
+def _polygon_box(pts, dirs, ns) -> tuple[float, float, float, float]:
+    """(lat_lo, lat_hi, lon_lo, lon_hi) containing every point the
+    plane test over ``ns`` accepts, for a :func:`_convex_ring`. Great-
+    circle edges bulge past their vertices' latitudes, so each edge's
+    extreme arc latitude widens the vertex band; a ring around a pole
+    reaches that pole at every longitude. Longitude along an edge is
+    monotonic between its vertices (no dateline crossing in the
+    subset)."""
+    lats = [p[0] for p in pts]
+    lons = [p[1] for p in pts]
+    for i in range(len(dirs)):
+        lats += _arc_extreme_lats(dirs[i], dirs[(i + 1) % len(dirs)])
+    lat_lo, lat_hi, lon_lo, lon_hi = min(lats), max(lats), min(lons), max(lons)
+    for pole in (1.0, -1.0):
+        if all(pole * n[2] >= -1e-12 for n in ns):
+            lat_lo, lat_hi = min(lat_lo, pole * 90.0), max(lat_hi, pole * 90.0)
+            lon_lo, lon_hi = -180.0, 180.0
+    return lat_lo, lat_hi, lon_lo, lon_hi
 
 
 def convex_polygon_condition(q) -> Column:
     """GeoConvexPolygon.isWithin role: AND of per-edge plane dot
     products (normals are query-time constants), AND'd with the
-    vertex bounding box for parquet row-group pruning."""
-    ns = _edge_normals(q.points)
-    pts = [tuple(p) for p in q.points]
-    if pts[0] == pts[-1]:
-        pts = pts[:-1]
-    lats = [p[0] for p in pts]
-    lons = [p[1] for p in pts]
-    coarse = F.col(q.lat_field).between(min(lats), max(lats)) & F.col(q.lon_field).between(
-        min(lons), max(lons)
+    bounding box of :func:`_polygon_box` for parquet row-group
+    pruning."""
+    pts, dirs, ns = _convex_ring(q.points)
+    lat_lo, lat_hi, lon_lo, lon_hi = _polygon_box(pts, dirs, ns)
+    coarse = F.col(q.lat_field).between(lat_lo, lat_hi) & F.col(q.lon_field).between(
+        lon_lo, lon_hi
     )
     x, y, z = _dir_cols(q.lat_field, q.lon_field)
     cond = coarse
@@ -258,6 +294,8 @@ def circle_sql(q) -> str:
     """The DuckDB mirror of circle_condition (gate oracle)."""
     model = MODELS[q.model]
     cutoff = float(q.radius_m) / model.mean_radius
+    if cutoff >= math.pi:
+        return "TRUE"
     lat0, lon0 = math.radians(q.lat), math.radians(q.lon)
     px, py, pz = direction(lat0, lon0)
     band_lo, band_hi = math.degrees(lat0 - cutoff), math.degrees(lat0 + cutoff)
@@ -274,19 +312,15 @@ def circle_sql(q) -> str:
 
 def polygon_sql(q) -> str:
     """The DuckDB mirror of convex_polygon_condition (gate oracle)."""
-    ns = _edge_normals(q.points)
-    pts = [tuple(p) for p in q.points]
-    if pts[0] == pts[-1]:
-        pts = pts[:-1]
-    lats = [p[0] for p in pts]
-    lons = [p[1] for p in pts]
+    pts, dirs, ns = _convex_ring(q.points)
+    lat_lo, lat_hi, lon_lo, lon_hi = _polygon_box(pts, dirs, ns)
     lat, lon = f"radians({q.lat_field})", f"radians({q.lon_field})"
     x = f"cos({lat})*cos({lon})"
     y = f"cos({lat})*sin({lon})"
     z = f"sin({lat})"
     parts = [
-        f"({q.lat_field} BETWEEN {min(lats)!r} AND {max(lats)!r})",
-        f"({q.lon_field} BETWEEN {min(lons)!r} AND {max(lons)!r})",
+        f"({q.lat_field} BETWEEN {lat_lo!r} AND {lat_hi!r})",
+        f"({q.lon_field} BETWEEN {lon_lo!r} AND {lon_hi!r})",
     ]
     for nx, ny, nz in ns:
         parts.append(f"(({x})*({nx!r}) + ({y})*({ny!r}) + ({z})*({nz!r}) >= -1e-12)")

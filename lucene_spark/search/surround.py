@@ -78,9 +78,6 @@ class _P:
     def peek(self):
         return self.toks[self.i][0] if self.i < len(self.toks) else None
 
-    def peek_val(self):
-        return self.toks[self.i][1] if self.i < len(self.toks) else None
-
     def next(self):
         t = self.toks[self.i]
         self.i += 1

@@ -86,6 +86,9 @@ class TestMembership:
         pdf = ordered.copy()
         pdf["lat"] = [LAT(i) for i in range(len(pdf))]
         pdf["lon"] = [LON(i) for i in range(len(pdf))]
+        # doc 0 sits in the great-circle bulge of a polygon edge (see
+        # TestPolygonEdgeBulge), past its vertices' latitude box
+        pdf.loc[0, ["lat", "lon"]] = TestPolygonEdgeBulge.POINT
         d = str(tmp_path_factory.mktemp("geo3dix"))
         IndexBuilder(spark, IndexConfig(docs_per_chunk=128, term_buckets=4)).build(
             spark.createDataFrame(pdf).drop("content_sha256"), d
@@ -138,20 +141,17 @@ class TestMembership:
             )
         )
         got = {d for d, _ in s.search(q, k=10_000).hits}
-        # brute: same plane sidedness in numpy
-        from lucene_spark.search.spatial3d import _edge_normals
+        # brute: the plane sidedness alone, in numpy
+        from lucene_spark.search.spatial3d import _convex_ring
 
-        ns = np.array(_edge_normals(ring))
+        ns = np.array(_convex_ring(ring)[2])
         la = np.radians(pdf["lat"].to_numpy())
         lo = np.radians(pdf["lon"].to_numpy())
         d = np.stack([np.cos(la) * np.cos(lo), np.cos(la) * np.sin(lo), np.sin(la)], axis=1)
-        lats = pdf["lat"].to_numpy()
-        lons = pdf["lon"].to_numpy()
-        inside = ((d @ ns.T) >= -1e-12).all(axis=1) & (lats >= 0) & (lats <= 35) & (
-            lons >= 0
-        ) & (lons <= 40)
+        inside = ((d @ ns.T) >= -1e-12).all(axis=1)
         want = set(np.flatnonzero(inside).tolist())
         assert got == want and want
+        assert 0 in got  # the bulge doc, above every vertex's latitude
 
     def test_polygon_agrees_with_2d_raycast_midlatitudes(self, geo_index):
         """A small convex ring away from poles/dateline: the 3D plane
@@ -185,7 +185,47 @@ class TestMembership:
         assert (got3 - margin) == (got2 - margin)
 
     def test_nonconvex_rejected(self):
-        from lucene_spark.search.spatial3d import _edge_normals
+        from lucene_spark.search.spatial3d import _convex_ring
 
         with pytest.raises(ValueError):
-            _edge_normals(((0, 0), (0, 30), (10, 15), (30, 30), (30, 0)))
+            _convex_ring(((0, 0), (0, 30), (10, 15), (30, 30), (30, 0)))
+
+
+class TestPolygonEdgeBulge:
+    """Great-circle edges bulge past their vertices' latitudes: the
+    edge from (35, 0) to (35, 40) peaks near 36.69° at lon 20, so
+    (36.5, 20) is inside the ring although every vertex stops at 35."""
+
+    RING = ((0.0, 0.0), (0.0, 40.0), (35.0, 40.0), (35.0, 0.0))
+    POINT = (36.5, 20.0)
+
+    def test_pruning_box_covers_bulge(self):
+        """The box both convex_polygon_condition and polygon_sql AND
+        with the plane test reaches the edge's apex latitude."""
+        from lucene_spark.search.spatial3d import _convex_ring, _polygon_box
+
+        lat_lo, lat_hi, lon_lo, lon_hi = _polygon_box(*_convex_ring(self.RING))
+        assert lat_lo <= 0.0 and lat_hi >= 36.5 and lon_lo <= 20.0 <= lon_hi
+        assert lat_hi < 37.0  # still a pruning bound, not the whole sphere
+
+    def test_sql_finds_bulge_point(self):
+        duckdb = pytest.importorskip("duckdb")
+        from lucene_spark.search.spatial3d import polygon_sql
+
+        q = A.Geo3DPolygonQuery("lat", "lon", self.RING)
+        rows = duckdb.sql(
+            "SELECT lat, lon FROM (VALUES (36.5, 20.0), (37.0, 20.0)) t(lat, lon) "
+            "WHERE " + polygon_sql(q)
+        ).fetchall()
+        assert [(float(a), float(b)) for a, b in rows] == [(36.5, 20.0)]
+
+    def test_circle_sql_whole_sphere(self):
+        duckdb = pytest.importorskip("duckdb")
+        from lucene_spark.search.spatial3d import circle_sql
+
+        q = A.Geo3DDistanceQuery("lat", "lon", 10.0, 20.0, 3.0e7, model="sphere")
+        rows = duckdb.sql(
+            "SELECT count(*) FROM (VALUES (-80.0, -170.0), (-10.0, -160.0)) t(lat, lon) "
+            "WHERE " + circle_sql(q)
+        ).fetchone()
+        assert rows == (2,)
